@@ -62,10 +62,11 @@ def _roundtrip(df: DataFrame, codecs: dict | None = None) -> DataFrame:
 
 def _roundtrip_proj(spark: SparkSession, sf_dir: str, table: str, columns: list[str], codecs: dict | None = None) -> DataFrame:
     """Pure-projection roundtrip (no computed columns) with an
-    Arrow-native scan for large inputs (r6, guide §4.1/§8.4): above
-    MIN_FUSED_ROWS the JVM→Python row transpose of the Spark scan feed
-    dominates the leg (measured: identity mapInArrow 2.5 s vs 0.27 s scan
-    on 6M-row lineitem), so the encode reads its row-group slice with
+    Arrow-native scan for large inputs (r6, guide §4.1/§8.4): for a table
+    that passes the fused-feed gate (arrow_scan.fused_feed_files) the
+    JVM→Python row transpose of the Spark scan feed dominates the leg
+    (measured: identity mapInArrow 2.5 s vs 0.27 s scan on 6M-row
+    lineitem), so the encode reads its row-group slice with
     pyarrow inside the task instead — same encode kernels, same decoded
     rows (oracle-checked), 2.83 s → 1.51 s measured on the auto roundtrip.
     Small inputs keep the plain path (split planning would cost more than
@@ -74,21 +75,14 @@ def _roundtrip_proj(spark: SparkSession, sf_dir: str, table: str, columns: list[
     mapInArrow, so the block payloads never cross into the JVM between
     the kernels — 1.07 s → 0.74 s measured on the 6M-row auto roundtrip,
     CRC-identical."""
-    path = f"{sf_dir}/{table}.parquet"
-    df = _t(spark, sf_dir, table).select(*columns)
-    try:
-        from parquet_spark.sources.arrow_scan import (
-            MIN_FUSED_ROWS,
-            estimate_rows,
-            roundtrip_parquet_arrow,
-        )
+    from parquet_spark.sources.arrow_scan import fused_feed_files, roundtrip_parquet_arrow
 
-        if estimate_rows(path) >= MIN_FUSED_ROWS:
-            return roundtrip_parquet_arrow(
-                spark, path, list(columns), df.schema, codecs=codecs
-            )
-    except (OSError, ValueError):
-        pass  # non-local or unreadable input: use the Spark scan
+    base = _t(spark, sf_dir, table)
+    df = base.select(*columns)
+    if fused_feed_files(base) is not None:
+        return roundtrip_parquet_arrow(
+            spark, f"{sf_dir}/{table}.parquet", list(columns), df.schema, codecs=codecs
+        )
     return _roundtrip(df, codecs=codecs)
 
 

@@ -108,9 +108,11 @@ def roundtrip_table(
 ) -> DataFrame:
     """encode→decode fused into ONE mapInArrow stage (r6, guide §4.1).
 
-    Semantically identical to `decode_table(encode_table(df), df.schema)`
-    — the same `_encode_fn` kernels produce the same block bytes and the
-    same `_decode_fn` kernels decode them — but the blocks relation never
+    Returns the rows of `decode_table(encode_table(df), df.schema)` — the
+    same `_encode_fn` kernels produce the same block bytes and the same
+    `_decode_fn` kernels decode them — except for a `__bucket` column: it
+    is consumed as the bucket key and left out of the output, where the
+    two-stage chain would decode it as nulls. The blocks relation never
     crosses the Python↔JVM boundary between the two stages (two chained
     mapInArrow nodes each run their own Python worker, with a full Arrow
     round-trip of the multi-MB payloads between them). Measured on the
@@ -149,83 +151,56 @@ def _maybe_decode_blocks_arrow(
     verify: bool,
 ) -> DataFrame | None:
     """Fused pyarrow blocks-scan decode for the bare read case (r6
-    optimization, guide §4.1/§8.4 — the same move as sources.arrow_scan
-    on the encode side): instead of Spark scanning the blocks parquet
-    (multi-MB binary payloads copied parquet → JVM column vector →
-    internal row → Arrow feed), each task reads its own blocks slice with
-    pyarrow straight into Arrow and runs the SAME `_decode_fn` kernels.
-    Measured on the bench's encoded sequences table (300k rows, 32 block
-    files): decode+agg 1.02 s → 0.62 s interleaved min, CRC-identical.
+    optimization, guide §4.1/§8.4): instead of Spark scanning the blocks
+    parquet (multi-MB binary payloads copied parquet → JVM column vector →
+    internal row → Arrow feed), the Arrow split feed
+    (sources.arrow_scan.run_split_feed) reads the blocks straight into
+    Arrow and runs the SAME `_decode_fn` kernels. Measured on the bench's
+    encoded sequences table (300k rows, 32 block files): decode+agg
+    1.02 s → 0.62 s interleaved min, CRC-identical. Payload columns a
+    blocks file does not carry are null-filled, exactly like mergeSchema
+    + the decode's null-scatter.
 
-    Only the shapes this reproduces exactly qualify; anything else
-    returns None and the caller keeps the Spark scan:
-    - local filesystem storage (tablefs URIs fall back),
-    - no hive-style subdirectories under the generation dir,
-    - no `where` pruning / `as_of` batch filtering (the caller gates).
-    Schema evolution is honored per file: payload columns a blocks file
-    does not carry are null-filled, exactly like mergeSchema + the
-    decode's null-scatter. At scale the planning is file-listing only
-    (>= parallelism files ⇒ zero driver footer reads, same rule as the
-    encode-side planner)."""
-    try:
-        if not os.path.isdir(data_dir):
-            return None
-        entries = os.listdir(data_dir)
-        if any(os.path.isdir(os.path.join(data_dir, e)) for e in entries):
-            return None  # partition-dir layout: keep Spark's scan
-        data_bytes = sum(
-            os.path.getsize(os.path.join(data_dir, e))
-            for e in entries
-            if e.endswith(".parquet") and not e.startswith((".", "_"))
-        )
-    except OSError:
-        return None
-    from parquet_spark.sources.arrow_scan import _read_split, plan_arrow_splits
+    Returns None, and the caller keeps the Spark scan, only for shapes
+    this does not reproduce: a generation dir that is not a local
+    directory (missing, or tablefs URI storage), hive-style (`batch=<n>`)
+    subdirectories, a table with no splits to read, or a
+    session with spark.sql.files.ignoreCorruptFiles set (Spark's scan
+    skips corrupt files; pyarrow would raise). `where` pruning and
+    `as_of` batch filtering are gated by the caller."""
+    from parquet_spark.operators.encode import DEFAULT_BLOCK_ROWS
+    from parquet_spark.sources.arrow_scan import (
+        _list_parquet_files,
+        _plan_splits_for_files,
+        run_split_feed,
+    )
 
-    try:
-        splits = plan_arrow_splits(data_dir, spark.sparkContext.defaultParallelism)
-    except Exception:  # noqa: BLE001 — any planning surprise (no/unreadable
-        # files, all-empty part files): the Spark scan is always correct
+    if spark.conf.get("spark.sql.files.ignoreCorruptFiles").strip().lower() == "true":
         return None
+    if not os.path.isdir(data_dir) or any(
+        os.path.isdir(os.path.join(data_dir, e)) for e in os.listdir(data_dir)
+    ):
+        return None
+    files = _list_parquet_files(data_dir)
+    par = spark.sparkContext.defaultParallelism
+    splits = _plan_splits_for_files(files, par, DEFAULT_BLOCK_ROWS)
     if not splits:
         return None
-    bc = spark.sparkContext.broadcast(splits)
     # pack splits into tasks the way Spark's scan bin-packs small files:
     # a fragmented table (many tiny block files — the state compact_table
     # exists to fix, and compact_table itself reads through here) must not
-    # schedule one near-empty task per file. Partition count follows data
-    # size (~128 MB per task, Spark's maxPartitionBytes default) with a
-    # floor of full parallelism; each task loops over its packed splits.
-    par = spark.sparkContext.defaultParallelism
-    n_parts = max(1, min(len(splits), max(par, data_bytes // (128 << 20))))
-    sdf = spark.range(0, len(splits), numPartitions=n_parts)
+    # schedule one near-empty task per file. Task count follows data size
+    # (~128 MB per task, Spark's maxPartitionBytes default) with a floor
+    # of full parallelism; each task loops over its packed splits.
+    data_bytes = sum(os.path.getsize(f) for f in files)
+    n_tasks = max(1, min(len(splits), max(par, data_bytes // (128 << 20))))
+    fields = pa.schema(
+        ([("meta", pa.string())] if verify else [])
+        + [("n_rows", pa.int32())]
+        + [(c, pa.binary()) for c in columns]
+    )
     dec = _decode_fn(list(columns), out_schema, verify)
-    want = (["meta"] if verify else []) + ["n_rows"] + list(columns)
-
-    def gen(batches):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        def feed():
-            for b in batches:
-                for sid in b.column("id").to_pylist():
-                    f, rg, lo, hi = bc.value[sid]
-                    pf = pq.ParquetFile(f)
-                    have = set(pf.schema_arrow.names)
-                    cols_here = [c for c in want if c in have]
-                    missing = [c for c in want if c not in have]
-                    for batch in _read_split(f, rg, lo, hi, cols_here, 16384, pf=pf):
-                        for c in missing:
-                            # written before the column existed: null
-                            # payload → _decode_fn null-fills the rows
-                            batch = batch.append_column(
-                                c, pa.nulls(batch.num_rows, pa.binary())
-                            )
-                        yield batch
-
-        yield from dec(feed())
-
-    return sdf.mapInArrow(gen, out_schema)
+    return run_split_feed(spark, splits, n_tasks, fields, dec, out_schema)
 
 
 _PRUNE_OPS = {">", ">=", "<", "<=", "=", "==", "!=", "in"}

@@ -451,6 +451,25 @@ def dataset_fingerprint(df: DataFrame, explicit: str | None = None) -> str:
 
 _NARROW_NODES = {"Project", "Filter", "Relation", "SubqueryAlias", "View", "ResolvedHint"}
 
+
+def _optimized_plan_nodes(df: DataFrame) -> list[tuple[str, str]] | None:
+    """(node name, plan line) for each node of `df`'s optimized logical
+    plan, top down — the zero-job view the static feed and balance checks
+    reason about. None when the JVM cannot produce the plan."""
+    from py4j.protocol import Py4JError
+
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+    except Py4JError:
+        return None
+    nodes = []
+    for line in plan.splitlines():
+        node = line.lstrip(" +-:").split(" ", 1)[0].split("[", 1)[0]
+        if node:
+            nodes.append((node, line))
+    return nodes
+
+
 _SIZE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
 
 
@@ -485,15 +504,11 @@ def _scan_is_byte_balanced(df: DataFrame) -> bool | None:
     above the fragmentation floor; None in every other case (then the
     caller falls back to the measured probe job — only the happy verdict
     short-circuits)."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
+    nodes = _optimized_plan_nodes(df)
+    if nodes is None:
         return None
     splittable = False
-    for line in plan.splitlines():
-        node = line.lstrip(" +-:").split(" ", 1)[0].split("[", 1)[0]
-        if not node:
-            continue
+    for node, line in nodes:
         if node == "Relation":
             # only splittable columnar formats give the balance guarantee
             splittable = " parquet" in line or " orc" in line
@@ -659,6 +674,24 @@ def _partition_balance(df: DataFrame, weight_col: str | None) -> dict | None:
     }
 
 
+def _arrow_feed_plan(df: DataFrame, target_partitions: int, block_rows: int) -> tuple[list, dict] | None:
+    """(splits, plan identity) when write_encoded's auto mode encodes `df`
+    through the Arrow split feed, else None. The input must pass the
+    fused-feed gate (sources/arrow_scan.py: bare local parquet, row count
+    at least MIN_FUSED_ROWS) and plan at least as many splits as the
+    salted path's parallelism yardstick asks of input partitions."""
+    from parquet_spark.sources import arrow_scan
+
+    files = arrow_scan.fused_feed_files(df)
+    if files is None:
+        return None
+    par = df.sparkSession.sparkContext.defaultParallelism
+    splits, plan = arrow_scan.plan_encode_splits(files, par, block_rows)
+    if len(splits) < max(2, min(target_partitions, par) // 2):
+        return None
+    return splits, plan
+
+
 def write_encoded(
     df: DataFrame,
     path: str,
@@ -788,24 +821,12 @@ def write_encoded(
     if chosen == "auto":
         chosen = "salted"
         if cluster_col is None:
-            # bare local parquet relation with a LARGE row count: feed the
-            # encode tasks with pyarrow reads of (file, row-group, range)
-            # splits instead of the Spark scan — same kernels, no
-            # JVM->Python row transpose (sources/arrow_scan.py; measured
-            # 2.5 s of pure conversion on a 6M-row feed, while a 300k-row
-            # nested-array table measured FASTER through the Spark feed —
-            # hence the row gate, which scales with what actually costs:
-            # the per-row transpose). Split planning is zero-footer-IO in
-            # the many-files regime; balance holds by construction
-            # (row-range splits), so no probe job is needed either.
-            from parquet_spark.sources import arrow_scan
-
-            files = arrow_scan.bare_parquet_files(df)
-            if files is not None and arrow_scan.estimate_rows_files(files) >= arrow_scan.MIN_FUSED_ROWS:
-                cand_splits, cand_plan = arrow_scan.plan_encode_splits(files, par, block_rows)
-                if len(cand_splits) >= max(2, min(target_partitions, par) // 2):
-                    chosen = "arrow"
-                    arrow_splits, arrow_plan = cand_splits, cand_plan
+            # balance holds by construction on the Arrow feed (row-range
+            # splits), so no probe job is needed either
+            arrow = _arrow_feed_plan(df, target_partitions, block_rows)
+            if arrow is not None:
+                chosen = "arrow"
+                arrow_splits, arrow_plan = arrow
         if chosen == "salted":
             # parallelism yardstick: what would the SALTED path actually give?
             # min(target_partitions, cluster cores) — when the input already
@@ -896,16 +917,19 @@ def write_encoded(
         pending = os.path.join(man_dir, f"_pending-{uuid.uuid4().hex[:8]}")
         tablefs.mkdirs(pending)
         if chosen == "arrow":
-            from parquet_spark.sources.arrow_scan import encode_splits_arrow
+            # one task per split; each row carries its split id as bucket
+            from parquet_spark.sources.arrow_scan import arrow_fields, run_split_feed
 
             type_of = {f.name: f.dataType.simpleString() for f in df.schema.fields}
             stats_cols = [c for c in columns if type_of.get(c) in _STATS_SPARK_TYPES]
-            blocks = encode_splits_arrow(
-                spark, arrow_splits, columns,
+            enc = _encode_fn(
+                columns, block_rows, codecs, compression, has_bucket=True,
+                stats_cols=stats_cols, manifest_dir=pending, bloom_cols=bloom_cols,
+            )
+            blocks = run_split_feed(
+                spark, arrow_splits, len(arrow_splits), arrow_fields(df.schema, columns), enc,
                 _blocks_out_ddl(columns, type_of, stats_cols, list(bloom_cols or [])),
-                block_rows=block_rows, codecs=codecs, compression=compression,
-                stats_cols=stats_cols, manifest_dir=pending,
-                bloom_cols=list(bloom_cols or []),
+                tag_bucket=True,
             )
         else:
             blocks = encode_table(

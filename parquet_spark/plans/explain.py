@@ -133,23 +133,23 @@ def explain_encode(df: DataFrame, sample_rows: int = 16384) -> list[dict]:
 def explain_partitioning(df: DataFrame, target_partitions: int | None = None) -> str:
     """One-line prediction of write_encoded's bucket_mode='auto' decision,
     using only the zero-job static analysis (never runs the probe job)."""
-    from parquet_spark.operators.encode import _scan_is_byte_balanced
+    from parquet_spark.operators.encode import (
+        DEFAULT_BLOCK_ROWS,
+        _arrow_feed_plan,
+        _scan_is_byte_balanced,
+    )
 
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     tp = target_partitions or max(par * 2, 8)
     npart = df.rdd.getNumPartitions()
-    from parquet_spark.sources import arrow_scan
-
-    files = arrow_scan.bare_parquet_files(df)
-    if files is not None and arrow_scan.estimate_rows_files(files) >= arrow_scan.MIN_FUSED_ROWS:
-        splits, _plan = arrow_scan.plan_encode_splits(files, par)
-        if len(splits) >= max(2, min(tp, par) // 2):
-            return (
-                f"arrow fused scan+encode: bare local parquet relation, "
-                f"{len(splits)} row-group/range splits read with pyarrow in-task "
-                f"(no JVM row feed, no shuffle)"
-            )
+    arrow = _arrow_feed_plan(df, tp, DEFAULT_BLOCK_ROWS)
+    if arrow is not None:
+        return (
+            f"arrow fused scan+encode: bare local parquet relation, "
+            f"{len(arrow[0])} row-group/range splits read with pyarrow in-task "
+            f"(no JVM row feed, no shuffle)"
+        )
     if npart < max(2, min(tp, par) // 2):
         return (
             f"salted shuffle: {npart} input partition(s) underuse "

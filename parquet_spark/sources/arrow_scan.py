@@ -1,26 +1,28 @@
-"""Arrow-native parquet scan fused with the block encode (one mapInArrow).
+"""Arrow split feed: the one way the engine reads parquet with pyarrow
+inside Spark tasks, and the one gate that decides when to use it.
 
-Why this exists (r6 optimization round): `encode_table` over a Spark
-parquet scan pays the JVM→Python Arrow conversion for every input row —
-Spark's vectorized reader materializes internal rows, and the mapInArrow
-feed transposes them back into Arrow batches row by row. Measured on the
-6M-row lineitem projection (local[32], sf1.0): an *identity* mapInArrow
-costs 2.5 s against a 0.27 s scan — the conversion, not the codecs, is the
-whole roundtrip budget (spark_optimization_guide §4.1: "you cannot remove
-that cost, but you control how many columns cross" — here we remove the
-crossing itself for the scan side).
+Why this exists (r6 optimization round): a kernel fed by a Spark parquet
+scan pays the JVM→Python Arrow conversion for every input row. Measured
+on the 6M-row lineitem projection (local[32], sf1.0): an *identity*
+mapInArrow costs 2.5 s against a 0.27 s scan — the conversion, not the
+codecs, is the whole roundtrip budget (spark_optimization_guide §4.1).
+The feed applies the guide's §8.4 co-locate pattern instead.
 
-This operator applies the guide's §8.4 co-locate pattern instead: the
-driver plans (file, row-group, row-range) splits, Spark distributes them
-as one tiny row each, and every task reads its own slice with pyarrow
-directly into Arrow batches — already columnar, zero JVM row traffic —
-feeding the SAME `_encode_fn` kernels that `encode_table` uses. The
-output relation is identical in shape and content semantics (one row per
-block, binary payload columns), so `decode_table` consumes it unchanged.
-Measured: the lineitem auto roundtrip drops 2.83 s → 1.51 s (interleaved
-min, same session).
+**One runner**, `run_split_feed`: the driver's planned splits ship as
+one `spark.range` over split indices plus one broadcast of the split
+list; each task reads its splits with pyarrow straight into Arrow
+batches and runs an Arrow kernel over them. `encode_parquet_arrow`,
+`roundtrip_parquet_arrow` and `write_encoded`'s arrow mode (rows tagged
+with the split id as `__bucket`) run one task per split; bare
+`read_encoded` bin-packs splits at ~128 MB per task with a floor of
+defaultParallelism, like Spark's own small-file packing.
 
-Scale behaviour (the rules are size-derived, not tuned to local[32]):
+**One gate**, `fused_feed_files`: a DataFrame takes the feed only when its
+optimized plan is a bare local parquet relation and its footer row count
+reaches `MIN_FUSED_ROWS`. `write_encoded`, `explain_partitioning` and the
+roundtrip queries all ask it.
+
+Split planning is size-derived, not tuned to one core count:
 
 - **many files** (>= default parallelism): one split per file and the
   driver reads NO footers — planning is file listing only, the same
@@ -37,9 +39,17 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from parquet_spark.operators.encode import DEFAULT_BLOCK_ROWS, _encode_fn
+from parquet_spark.operators.encode import (
+    BUCKET_COL,
+    DEFAULT_BLOCK_ROWS,
+    _blocks_out_ddl,
+    _encode_fn,
+    _optimized_plan_nodes,
+)
 
 # below this row count the JVM feed is cheaper than split planning +
 # per-task footer reads; callers should use the plain encode_table path.
@@ -68,48 +78,43 @@ def _list_parquet_files(path: str) -> list[str]:
     raise FileNotFoundError(path)
 
 
-def estimate_rows(path: str) -> int:
-    """Total row count from footer metadata (driver-side; one footer read
-    per file, intended for the small-file-count regime where the caller
-    is choosing between the fused and plain scan paths)."""
-    return estimate_rows_files(_list_parquet_files(path))
-
-
-def estimate_rows_files(files: list[str], max_footers: int = 64) -> int:
-    """Row-count estimate with bounded driver IO: exact when the file
-    count is small, first-file-rows x file-count beyond that (row counts
-    per part file are near-uniform for any sanely written table, and the
-    estimate only gates a threshold choice)."""
-    import pyarrow.parquet as pq
-
-    if not files:
-        return 0
-    if len(files) <= max_footers:
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    return pq.ParquetFile(files[0]).metadata.num_rows * len(files)
-
-
 def bare_parquet_files(df: DataFrame) -> list[str] | None:
     """Local parquet files of a DataFrame whose optimized plan is a BARE
     file relation — no projection, filter, or computed column — i.e. the
     only shape the fused Arrow feed reproduces exactly (anything Catalyst
     computes must keep the Spark scan). None when the shape or storage
     doesn't qualify; the caller falls back to the JVM feed."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
+    nodes = _optimized_plan_nodes(df)
+    if nodes is None or len(nodes) != 1:
         return None
-    lines = [ln for ln in plan.splitlines() if ln.strip()]
-    if len(lines) != 1:
-        return None
-    node = lines[0].lstrip(" +-:").split(" ", 1)[0].split("[", 1)[0]
-    if node != "Relation" or " parquet" not in lines[0]:
+    node, line = nodes[0]
+    if node != "Relation" or " parquet" not in line:
         return None
     files = df.inputFiles()
     if not files or not all(f.startswith("file:") for f in files):
         return None
     out = sorted(f[len("file:") :] for f in files)
     return out if all(os.path.exists(f) for f in out) else None
+
+
+def fused_feed_files(df: DataFrame) -> list[str] | None:
+    """The fused-vs-Spark gate: the local parquet files `df` reads when it
+    takes the Arrow split feed, else None (keep the Spark scan). It
+    qualifies when `bare_parquet_files` accepts it and its footer row
+    count reaches MIN_FUSED_ROWS. Driver IO is bounded: footers are read
+    exactly up to 64 files; beyond that the estimate is first-file rows x
+    file count (row counts per part file are near-uniform for any sanely
+    written table, and the estimate only gates a threshold choice)."""
+    import pyarrow.parquet as pq
+
+    files = bare_parquet_files(df)
+    if files is None:
+        return None
+    if len(files) <= 64:
+        rows = sum(pq.read_metadata(f).num_rows for f in files)
+    else:
+        rows = pq.read_metadata(files[0]).num_rows * len(files)
+    return files if rows >= MIN_FUSED_ROWS else None
 
 
 def plan_encode_splits(
@@ -120,8 +125,7 @@ def plan_encode_splits(
     this plan and compares for equality — any drift (file set, core
     count, block size) invalidates recorded bucket ids and forces a full
     re-encode, exactly like partition-mode conf drift."""
-    raw = _plan_splits_for_files(files, parallelism, block_rows)
-    splits = [(i, f, rg, lo, hi) for i, (f, rg, lo, hi) in enumerate(raw)]
+    splits = _plan_splits_for_files(files, parallelism, block_rows)
     plan = {
         "mode": "arrow",
         "n_splits": len(splits),
@@ -136,52 +140,56 @@ def plan_arrow_splits(path: str, parallelism: int, block_rows: int = DEFAULT_BLO
     """(file, row_group, lo, hi) splits. row_group == -1 means the whole
     file (many-files regime: the driver read no footer, the task will).
     lo/hi are row offsets within the row group; hi == -1 means to the end."""
+    return [s[1:] for s in _path_splits(path, parallelism, block_rows)]
+
+
+def _path_splits(path: str, parallelism: int, block_rows: int) -> list[tuple[int, str, int, int, int]]:
     files = _list_parquet_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
     return _plan_splits_for_files(files, parallelism, block_rows)
 
 
-def _plan_splits_for_files(files: list[str], parallelism: int, block_rows: int) -> list[tuple[str, int, int, int]]:
+def _plan_splits_for_files(files: list[str], parallelism: int, block_rows: int) -> list[tuple[int, str, int, int, int]]:
+    """[(split_id, file, rg, lo, hi)], split ids 0..n-1 in file order.
+    In the few-files regime a file without row groups gets no split, so
+    a table of only such files plans none."""
     import pyarrow.parquet as pq
 
     if len(files) >= parallelism:
-        return [(f, -1, 0, -1) for f in files]
+        return [(i, f, -1, 0, -1) for i, f in enumerate(files)]
     splits: list[tuple[str, int, int, int]] = []
     rg_meta = []  # (file, rg, n_rows)
     for f in files:
-        meta = pq.ParquetFile(f).metadata
+        meta = pq.read_metadata(f)
         for rg in range(meta.num_row_groups):
             rg_meta.append((f, rg, meta.row_group(rg).num_rows))
     if len(rg_meta) >= parallelism:
-        return [(f, rg, 0, -1) for f, rg, _n in rg_meta]
-    # sub-split large row groups so every core gets work; keep ranges at
-    # least a couple of blocks so per-split overhead stays amortized
-    per_rg = max(1, -(-parallelism // len(rg_meta)))
-    for f, rg, n in rg_meta:
-        step = max(2 * block_rows, -(-n // per_rg))
-        lo = 0
-        while lo < n:
-            splits.append((f, rg, lo, min(lo + step, n)))
-            lo += step
-        if n == 0:
-            splits.append((f, rg, 0, -1))
-    return splits
+        splits = [(f, rg, 0, -1) for f, rg, _n in rg_meta]
+    elif rg_meta:
+        # sub-split large row groups so every core gets work; keep ranges
+        # at least a couple of blocks so per-split overhead stays amortized
+        per_rg = -(-parallelism // len(rg_meta))
+        for f, rg, n in rg_meta:
+            step = max(2 * block_rows, -(-n // per_rg))
+            lo = 0
+            while lo < n:
+                splits.append((f, rg, lo, min(lo + step, n)))
+                lo += step
+            if n == 0:
+                splits.append((f, rg, 0, -1))
+    return [(i, *s) for i, s in enumerate(splits)]
 
 
-def _read_split(path: str, rg: int, lo: int, hi: int, cols: list[str], batch_rows: int, pf=None):
-    """Yield Arrow batches for rows [lo, hi) of one row group (rg == -1:
-    the whole file; hi == -1: to the end). Stops decoding at hi, so a
-    sub-split pays at most the partial decode of its leading rows.
-    `pf`: an already-open ParquetFile for `path` (callers that probed the
-    schema avoid a second footer read)."""
-    import pyarrow.parquet as pq
-
-    pf = pf or pq.ParquetFile(path)
+def _read_split(pf, rg: int, lo: int, hi: int, cols: list[str]):
+    """Yield Arrow batches for rows [lo, hi) of one row group of the open
+    ParquetFile `pf` (rg == -1: the whole file; hi == -1: to the end).
+    Stops decoding at hi, so a sub-split pays at most the partial decode
+    of its leading rows."""
     rgs = None if rg < 0 else [rg]
     end = float("inf") if hi < 0 else hi
     off = 0
-    for batch in pf.iter_batches(batch_size=batch_rows, row_groups=rgs, columns=cols):
+    for batch in pf.iter_batches(batch_size=DEFAULT_BLOCK_ROWS, row_groups=rgs, columns=cols):
         n = batch.num_rows
         if off + n > lo and off < end:
             s = max(lo - off, 0)
@@ -192,24 +200,60 @@ def _read_split(path: str, rg: int, lo: int, hi: int, cols: list[str], batch_row
             break
 
 
-def _fused_scan_df(spark, path, cols, block_rows, kernel, out_schema):
-    """Shared skeleton of the fused-scan operators: plan splits, ship
-    them as a broadcast + JVM-native Range of split indices (one tiny row
-    each — a parallelize()d Python RDD would evaluate in one Python
-    worker and hand rows to the mapInArrow worker through the JVM, a
-    second Python hop per task that measured ~0.2 s across a 36-task
-    stage), and run `kernel` over the pyarrow batch feed inside each
-    task. The broadcast keeps the task closure O(1) at any split count."""
-    splits = plan_arrow_splits(path, spark.sparkContext.defaultParallelism, block_rows)
-    bc = spark.sparkContext.broadcast(splits)
-    sdf = spark.range(0, len(splits), numPartitions=len(splits))
+def arrow_fields(schema: StructType, columns: list[str]) -> pa.Schema:
+    """Arrow schema of `columns` of a Spark schema — the types
+    `run_split_feed` null-fills a column with when a file lacks it."""
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    def gen(batches):
+    by_name = {f.name: f.dataType for f in schema.fields}
+    return pa.schema([(c, to_arrow_type(by_name[c])) for c in columns])
+
+
+def run_split_feed(
+    spark: SparkSession,
+    splits: list[tuple[int, str, int, int, int]],
+    n_tasks: int,
+    fields: pa.Schema,
+    kernel,
+    out_schema,
+    tag_bucket: bool = False,
+) -> DataFrame:
+    """Run the Arrow `kernel` over a pyarrow read of `splits`
+    [(split_id, file, rg, lo, hi)], packed into `n_tasks` tasks of
+    consecutive splits. Splits ship as a JVM-native Range of split
+    indices plus a broadcast: a parallelize()d Python RDD would add a
+    second Python hop per task (~0.2 s measured across a 36-task stage),
+    and the broadcast keeps the task closure O(1) at any split count.
+
+    Batches carry the columns of `fields`; a file lacking one yields nulls
+    of its type, as Spark's mergeSchema scan does. Consecutive splits of
+    one file share one open ParquetFile. `tag_bucket` adds each row's
+    split id as the int32 `__bucket` column."""
+    bc = spark.sparkContext.broadcast(list(splits))
+    sdf = spark.range(0, len(splits), numPartitions=max(1, n_tasks))
+
+    def gen(ids):
+        import itertools
+
+        import numpy as np
+        import pyarrow.parquet as pq
+
         def feed():
-            for b in batches:
-                for sid in b.column("id").to_pylist():
-                    f, rg, lo, hi = bc.value[sid]
-                    yield from _read_split(f, rg, lo, hi, cols, block_rows)
+            todo = (bc.value[i] for b in ids for i in b.column("id").to_pylist())
+            for path, group in itertools.groupby(todo, key=lambda s: s[1]):
+                with pq.ParquetFile(path) as pf:
+                    have = set(pf.schema_arrow.names)
+                    cols = [f.name for f in fields if f.name in have]
+                    missing = [f for f in fields if f.name not in have]
+                    for sid, _path, rg, lo, hi in group:
+                        for batch in _read_split(pf, rg, lo, hi, cols):
+                            for f in missing:
+                                batch = batch.append_column(f, pa.nulls(batch.num_rows, f.type))
+                            if tag_bucket:
+                                batch = batch.append_column(
+                                    BUCKET_COL, pa.array(np.full(batch.num_rows, sid, np.int32))
+                                )
+                            yield batch
 
         yield from kernel(feed())
 
@@ -230,11 +274,9 @@ def encode_parquet_arrow(
     computed only to be dropped)."""
     cols = list(columns)
     enc = _encode_fn(cols, block_rows, codecs, compression, has_bucket=False)
-    out_ddl = (
-        "part_id int, block_id long, bucket int, n_rows int, meta string, "
-        + ", ".join(f"`{c}` binary" for c in cols)
-    )
-    return _fused_scan_df(spark, path, cols, block_rows, enc, out_ddl)
+    splits = _path_splits(path, spark.sparkContext.defaultParallelism, block_rows)
+    fields = arrow_fields(spark.read.parquet(path).schema, cols)
+    return run_split_feed(spark, splits, len(splits), fields, enc, _blocks_out_ddl(cols, {}, [], []))
 
 
 def roundtrip_parquet_arrow(
@@ -260,55 +302,7 @@ def roundtrip_parquet_arrow(
     check_reserved_columns(cols)
     enc = _encode_fn(cols, block_rows, codecs, None, has_bucket=False)
     dec = _decode_fn(cols, out_schema, False)
-    return _fused_scan_df(
-        spark, path, cols, block_rows, lambda feed: dec(enc(feed)), out_schema
+    splits = _path_splits(path, spark.sparkContext.defaultParallelism, block_rows)
+    return run_split_feed(
+        spark, splits, len(splits), arrow_fields(out_schema, cols), lambda feed: dec(enc(feed)), out_schema
     )
-
-
-def encode_splits_arrow(
-    spark: SparkSession,
-    splits: list[tuple[int, str, int, int, int]],
-    columns: list[str],
-    out_ddl: str,
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-    codecs: dict | None = None,
-    compression: str | None = None,
-    stats_cols: list[str] | None = None,
-    manifest_dir: str | None = None,
-    bloom_cols: list[str] | None = None,
-) -> DataFrame:
-    """Write-path fused scan+encode over pre-planned bucketed splits
-    [(bucket, file, rg, lo, hi)]: each task reads its slice with pyarrow,
-    tags the rows with the split's bucket id, and runs the standard
-    encode kernels — stats columns and side-band manifest included, so
-    the blocks relation is exactly what `encode_table` would produce for
-    write_encoded's partition mode, minus the JVM row feed. Distribution
-    is a JVM-native Range over split indices + a broadcast split list
-    (single Python hop per task; see encode_parquet_arrow)."""
-    bc = spark.sparkContext.broadcast(list(splits))
-    sdf = spark.range(0, max(len(splits), 1), numPartitions=max(len(splits), 1))
-    cols = list(columns)
-    enc = _encode_fn(
-        cols, block_rows, codecs, compression, has_bucket=True,
-        stats_cols=stats_cols, manifest_dir=manifest_dir, bloom_cols=bloom_cols,
-    )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        from parquet_spark.operators.encode import BUCKET_COL
-
-        def feed():
-            for b in batches:
-                for idx in b.column("id").to_pylist():
-                    if idx >= len(bc.value):
-                        continue  # empty split list: range(0,1) placeholder row
-                    bucket, f, rg, lo, hi = bc.value[idx]
-                    for batch in _read_split(f, rg, lo, hi, cols, block_rows):
-                        yield batch.append_column(
-                            BUCKET_COL, pa.array([bucket] * batch.num_rows, pa.int32())
-                        )
-
-        yield from enc(feed())
-
-    return sdf.mapInArrow(gen, out_ddl)

@@ -12,7 +12,6 @@ from parquet_spark.operators.decode import decode_table
 from parquet_spark.operators.encode import encode_table
 from parquet_spark.sources.arrow_scan import (
     encode_parquet_arrow,
-    estimate_rows,
     plan_arrow_splits,
 )
 
@@ -60,9 +59,9 @@ def test_fused_scan_small_blocks_many_splits(spark):
 
 def test_plan_splits_tile_rows_exactly():
     path = f"{SF_DIR}/lineitem.parquet"
-    total = estimate_rows(path)
     splits = plan_arrow_splits(path, parallelism=32)
     meta = pq.ParquetFile(path).metadata
+    total = meta.num_rows
     covered = 0
     for f, rg, lo, hi in splits:
         n = meta.row_group(rg).num_rows if rg >= 0 else meta.num_rows
@@ -81,6 +80,17 @@ def test_plan_splits_many_files_no_footer_reads(tmp_path):
     # many-files regime: one whole-file split each, no row-group detail
     assert len(splits) == 8
     assert all(rg == -1 and lo == 0 and hi == -1 for _f, rg, lo, hi in splits)
+
+
+def test_plan_splits_zero_row_group_files(tmp_path):
+    """Few-files regime over files with no row groups (a writer opened and
+    closed without rows): nothing to read, so no splits — not a crash."""
+    import pyarrow as pa
+
+    schema = pa.schema([("x", pa.int64())])
+    for i in range(2):
+        pq.ParquetWriter(str(tmp_path / f"p{i}.parquet"), schema).close()
+    assert plan_arrow_splits(str(tmp_path), parallelism=4) == []
 
 
 def test_plan_splits_missing_path():
@@ -143,3 +153,79 @@ def test_write_encoded_arrow_resume_plan_drift_reencodes(spark, tmp_path, monkey
     assert s["buckets_skipped"] == 0  # plan drift -> full re-encode
     assert _crc_seq(read_encoded(spark, path)) == _crc_seq(df)
     assert read_encoded(spark, path).count() == df.count()
+
+
+def test_write_encoded_arrow_mode_schema_evolved_input(spark, tmp_path, monkeypatch):
+    """A mergeSchema input whose older part file lacks a nullable column:
+    the Arrow feed must null-fill it per file, exactly as the Spark feed
+    does, so both bucket modes decode to the same rows."""
+    import pyarrow as pa
+
+    from parquet_spark.operators.decode import read_encoded
+    from parquet_spark.operators.encode import read_snapshot, write_encoded
+    from parquet_spark.sources import arrow_scan
+
+    monkeypatch.setattr(arrow_scan, "MIN_FUSED_ROWS", 100)
+    inp = tmp_path / "evo"
+    inp.mkdir()
+    ids = list(range(1000))
+    pq.write_table(pa.table({"doc_id": ids, "v": [i % 7 for i in ids]}), str(inp / "part-0.parquet"))
+    ids = list(range(1000, 2000))
+    pq.write_table(
+        pa.table({"doc_id": ids, "v": [i % 7 for i in ids], "score": [i * 0.5 for i in ids]}),
+        str(inp / "part-1.parquet"),
+    )
+    df = spark.read.option("mergeSchema", "true").parquet(str(inp))
+    fused, plain = str(tmp_path / "fused"), str(tmp_path / "plain")
+    write_encoded(df, fused, target_partitions=4, resume=False, block_rows=512)
+    write_encoded(df, plain, target_partitions=4, resume=False, block_rows=512, bucket_mode="partition")
+    assert read_snapshot(fused)["bucket_mode"] == "arrow"
+    got, want = read_encoded(spark, fused), read_encoded(spark, plain)
+    assert got.schema == want.schema
+    assert got.count() == want.count() == 2000
+    assert got.where(F.col("score").isNull()).count() == 1000
+    assert _crc(got) == _crc(want) == _crc(df)
+
+
+def _node_names(df):
+    """Executed-plan node names, top down, without codegen stage markers."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        re.sub(r"^[\s+\-:]*(\*\(\d+\)\s*)?", "", ln).split(" ", 1)[0].split("[", 1)[0]
+        for ln in plan.splitlines()
+        if ln.strip()
+    ]
+
+
+def test_fused_entry_points_plan_range_into_one_map_in_arrow(spark, tmp_path, monkeypatch):
+    """Every Arrow-feed entry point runs as a Range feeding exactly one
+    map-in-Arrow node, with no Exchange: a second Python hop or a shuffle
+    would cost a stage per read (~0.2 s measured for the extra hop)."""
+    from parquet_spark.operators.decode import read_encoded
+    from parquet_spark.operators.encode import read_snapshot, write_encoded
+    from parquet_spark.sources import arrow_scan
+    from parquet_spark.sources.arrow_scan import roundtrip_parquet_arrow
+    from parquet_spark.sources.synth import write_sequences
+
+    monkeypatch.setattr(arrow_scan, "MIN_FUSED_ROWS", 100)
+    fed = []
+    real = arrow_scan.run_split_feed
+    monkeypatch.setattr(
+        arrow_scan, "run_split_feed", lambda *a, **k: fed.append(real(*a, **k)) or fed[-1]
+    )
+    inp = str(tmp_path / "seq")
+    write_sequences(spark, inp, 2000, seed=13, n_partitions=4, mean_tokens=16)
+    path = str(tmp_path / "tbl")
+    write_encoded(spark.read.parquet(inp), path, target_partitions=4, resume=False, block_rows=256)
+    assert read_snapshot(path)["bucket_mode"] == "arrow"
+    df = spark.read.parquet(inp).select("doc_id", "n_tok")
+    plans = [
+        fed[0],
+        roundtrip_parquet_arrow(spark, inp, ["doc_id", "n_tok"], df.schema),
+        read_encoded(spark, path),
+    ]
+    assert len(fed) == 3
+    for plan in plans:
+        assert _node_names(plan) == ["MapInArrow", "Range"]

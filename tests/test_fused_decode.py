@@ -136,7 +136,7 @@ def test_fused_read_verify_detects_tamper(spark, tmp_path):
     blob = bytearray(open(part, "rb").read())
     blob[len(blob) // 3] ^= 0xFF  # flip one payload byte mid-file
     open(part, "wb").write(bytes(blob))
-    with pytest.raises(Exception):  # checksum mismatch (or parquet CRC)
+    with pytest.raises(Exception, match="checksum mismatch decoding column"):
         read_encoded(spark, path, verify=True).count()
 
 
@@ -214,3 +214,35 @@ def test_roundtrip_parquet_arrow_matches(spark):
     assert fused.schema == df.schema
     assert fused.count() == df.count()
     assert _crc(fused) == _crc(df)
+
+
+def test_fused_read_honours_ignore_corrupt_files(spark, tmp_path):
+    """With spark.sql.files.ignoreCorruptFiles the bare read must skip a
+    truncated blocks file like Spark's scan does, not raise: the fused
+    reader declines and the Spark scan returns the intact files' rows."""
+    import pyarrow.parquet as pq
+
+    from parquet_spark.operators.decode import read_encoded
+    from parquet_spark.operators.encode import read_snapshot, write_encoded
+    from parquet_spark.sources.synth import sequences_df
+
+    path = str(tmp_path / "t")
+    write_encoded(sequences_df(spark, 4000, seed=14, n_partitions=4), path, target_partitions=8, resume=False)
+    data_dir = os.path.join(path, read_snapshot(path).get("data_dir", "data"))
+    parts = sorted(os.path.join(data_dir, f) for f in os.listdir(data_dir) if f.endswith(".parquet"))
+    # at least one file per core: the fused reader plans without footers,
+    # so the truncation surfaces inside its tasks
+    assert len(parts) >= spark.sparkContext.defaultParallelism
+    intact = sum(sum(pq.read_table(f, columns=["n_rows"])["n_rows"].to_pylist()) for f in parts[1:])
+    with open(parts[0], "r+b") as fh:
+        fh.truncate(os.path.getsize(parts[0]) // 2)
+    # drop Hadoop's .crc sidecar: Spark's footer reader would fail on the
+    # stale checksum before it judges the file itself corrupt
+    sidecar = os.path.join(data_dir, f".{os.path.basename(parts[0])}.crc")
+    if os.path.exists(sidecar):
+        os.remove(sidecar)
+    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
+    try:
+        assert read_encoded(spark, path).count() == intact
+    finally:
+        spark.conf.unset("spark.sql.files.ignoreCorruptFiles")
